@@ -6,8 +6,9 @@ BinaryType natively, so the pipeline shape (schema, partitioning,
 Arrow batch transfer) is identical to production.
 
 The decode seam is :func:`decode_features`, a ``mapInPandas`` stage
-with ten codec branches: (a) ``codec='fake'`` — deterministic byte
-stats (real plumbing, fake features) used by tests; (b)
+over ten codecs, (b)-(j) registered in the :data:`CODECS` table and
+run by one Arrow-batch driver: (a) ``codec='fake'`` — deterministic
+byte stats (real plumbing, fake features) used by tests; (b)
 ``codec='ppm'`` — a REAL public codec, binary-PPM (P6) header parse +
 numpy channel means; (c) ``codec='png'`` — a REAL compressed codec,
 PNG 8-bit RGB via stdlib ``zlib`` inflate + per-scanline filter
@@ -2926,592 +2927,204 @@ def _make_avi_fixture_encoder():
     return encode
 
 
+def _make_ppm_decoder():
+    """:func:`_make_ppm_parser` plus the pixel view: ``bytes -> (w, h,
+    pix)`` with ``pix`` the (w*h, 3) uint8 RGB array, the shape the PNG
+    and JPEG decoders return."""
+    parse_ppm_p6 = _make_ppm_parser()
+
+    def decode_ppm(data: bytes):
+        w, h, _maxval, off = parse_ppm_p6(data)
+        pix = np.frombuffer(data, dtype=np.uint8, count=w * h * 3, offset=off)
+        return w, h, pix.reshape(-1, 3)
+
+    return decode_ppm
+
+
+def _make_mjpeg_decoder():
+    """MJPEG-in-AVI: the RIFF container walk composed with the baseline
+    JPEG decoder. ``bytes -> (w, h, fps_num, fps_den, frames)`` where
+    ``frames`` lazily yields each frame's (w*h, 3) RGB array. A frame
+    whose size differs from the container header makes the payload
+    corrupt (the JPEG decoder's own pixel cap bounds it first)."""
+    parse_avi = _make_avi_parser()
+    decode_jpeg = _make_jpeg_decoder()
+
+    def decode_mjpeg(data: bytes):
+        w, h, fn, fd, frames = parse_avi(data)
+
+        def rgb_frames():
+            for f, jpeg in enumerate(frames):
+                fw, fh, pix = decode_jpeg(jpeg)
+                if (fw, fh) != (w, h):
+                    raise ValueError(
+                        f"frame {f} is {fw}x{fh}, container declares {w}x{h}"
+                    )
+                yield pix
+
+        return w, h, fn, fd, rgb_frames()
+
+    return decode_mjpeg
+
+
+def _make_mrle_decoder():
+    """MS-RLE8-in-AVI: the RIFF walk (palette variant) composed with
+    :func:`_make_rle8_frame_decoder`. Same output shape as
+    :func:`_make_mjpeg_decoder`; skip opcodes carry pixels forward from
+    the previous frame's canvas, and frame 0 plays against an all-zero
+    canvas (the baseline the fixture encoder also diffs against)."""
+    parse_avi = _make_avi_parser("mrle")
+    play_rle8 = _make_rle8_frame_decoder()
+
+    def decode_mrle(data: bytes):
+        w, h, fn, fd, frames, pal = parse_avi(data)
+
+        def rgb_frames():
+            # uint8 canvas (indices are < 256 by the palette check): the
+            # worst header the parser admits costs 16.7MB, PNG-cap parity
+            canvas = np.zeros((h, w), dtype=np.uint8)
+            for rle in frames:
+                canvas = play_rle8(rle, w, h, canvas, len(pal))
+                yield pal[canvas.reshape(-1)].astype(np.int64)
+
+        return w, h, fn, fd, rgb_frames()
+
+    return decode_mrle
+
+
+def _make_stats_fns():
+    """The per-codec stats functions. Each maps one decoder result to
+    the codec's non-key columns in schema order (everything after
+    ``doc_id, valid``), means rounded to 6 places. A decoded stream
+    with no frames is VALID with NULL stats: ``mean()`` over an empty
+    axis would warn and produce nan. Built as closures so cloudpickle
+    ships them to the Python workers by value, like the decoders."""
+
+    def means6(arr, axis):
+        return [round(float(m), 6) for m in arr.mean(axis=axis, dtype=np.float64)]
+
+    def rgb_stats(w, h, pix):
+        return (w, h, *means6(pix, 0))
+
+    def channel_stats(n_ch, rate, frames):
+        m = means6(frames, 0) if len(frames) else [None, None]
+        return n_ch, rate, len(frames), m[0], m[1] if n_ch >= 2 else None
+
+    def y4m_stats(w, h, fn, fd, frames):
+        m = means6(frames, (0, 2)) if len(frames) else [None] * 3
+        chroma = [None, None] if frames.shape[1] == 1 else m[1:3]  # Cmono
+        return (w, h, len(frames), fn, fd, m[0], *chroma)
+
+    def gif_stats(w, h, frames):
+        if not len(frames):
+            return w, h, 0, None, None, None, None
+        # r_wsum: position-weighted red checksum (catches deinterlace
+        # and frame-order bugs the permutation-invariant means miss)
+        red = frames[:, :, 0].reshape(-1).astype(np.int64)
+        wsum = int((red * (np.arange(len(red), dtype=np.int64) + 1)).sum())
+        return (w, h, len(frames), *means6(frames, (0, 1)), wsum)
+
+    def video_stats(w, h, fn, fd, frames):
+        # r_fwsum: frame-weighted red checksum, (frame index + 1) * red
+        # total summed over frames (pins frame order)
+        sums = np.zeros(3, dtype=np.float64)
+        nf = wsum = 0
+        for nf, pix in enumerate(frames, start=1):
+            sums += pix.sum(axis=0, dtype=np.float64)
+            wsum += nf * int(pix[:, 0].sum(dtype=np.int64))
+        if not nf:
+            return w, h, 0, fn, fd, None, None, None, None
+        means = [round(float(s), 6) for s in sums / (nf * w * h)]
+        return (w, h, nf, fn, fd, *means, wsum)
+
+    return rgb_stats, channel_stats, y4m_stats, gif_stats, video_stats
+
+
+_rgb_stats, _channel_stats, _y4m_stats, _gif_stats, _video_stats = _make_stats_fns()
+
+# codec -> (decoder factory, output schema, stats function)
+CODECS = {
+    "ppm": (_make_ppm_decoder, PPM_STATS_SCHEMA, _rgb_stats),
+    "png": (_make_png_decoder, PPM_STATS_SCHEMA, _rgb_stats),
+    "jpeg": (_make_jpeg_decoder, PPM_STATS_SCHEMA, _rgb_stats),
+    "wav": (_make_wav_parser, WAV_STATS_SCHEMA, _channel_stats),
+    "flac": (_make_flac_decoder, WAV_STATS_SCHEMA, _channel_stats),
+    "y4m": (_make_y4m_parser, Y4M_STATS_SCHEMA, _y4m_stats),
+    "gif": (_make_gif_decoder, GIF_STATS_SCHEMA, _gif_stats),
+    "mjpeg": (_make_mjpeg_decoder, MJPEG_STATS_SCHEMA, _video_stats),
+    "mrle": (_make_mrle_decoder, MJPEG_STATS_SCHEMA, _video_stats),
+}
+
+# pandas dtype per DDL type in the codec schemas (nullable ints, so a
+# rejected row's NULLs survive the Arrow handoff)
+_PANDAS_DTYPES = {
+    "int": "Int32",
+    "bigint": "Int64",
+    "double": "float64",
+    "boolean": "bool",
+}
+
+
+def _decode_stats(media: DataFrame, make_decoder, schema: str, stats_fn) -> DataFrame:
+    """The Arrow-batch driver every :data:`CODECS` entry runs through.
+    A payload the decoder rejects with ``ValueError`` (NULL included)
+    becomes a ``valid=false`` row with every other column NULL instead
+    of failing the task: one corrupt blob must not kill a 100 TB
+    decode pass. Any other exception is a bug and fails the task."""
+    decode = make_decoder()
+    # (name, pandas dtype) for every column after doc_id, which passes through
+    fields = [f.split() for f in schema.split(",")]
+    cols = [(name, _PANDAS_DTYPES[ddl]) for name, ddl in fields[1:]]
+    rejected = (False,) + (None,) * (len(cols) - 1)
+
+    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
+        for pdf in batches:
+            rows = []
+            for payload in pdf["payload"]:
+                try:
+                    if payload is None:
+                        raise ValueError("null payload")
+                    rows.append((True, *stats_fn(*decode(bytes(payload)))))
+                except ValueError:
+                    rows.append(rejected)
+            values = list(zip(*rows)) or [()] * len(cols)
+            out = {"doc_id": pdf["doc_id"]}
+            for (name, dtype), v in zip(cols, values):
+                out[name] = pd.Series(list(v), dtype=dtype)
+            yield pd.DataFrame(out)
+
+    return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
+        decode_batches, schema
+    )
+
+
 def decode_features(media: DataFrame, codec: str = "fake") -> DataFrame:
     """Per-payload feature extraction over Arrow batches.
 
     ``codec='fake'``: deterministic byte statistics (real plumbing,
-    fake features) — output schema ``FEATURE_SCHEMA``.
+    fake features) — output schema ``FEATURE_SCHEMA``; a NULL payload
+    yields zero features.
 
-    ``codec='ppm'``: a REAL public codec — binary-PPM (P6) header
-    parse + per-channel pixel means via numpy — output schema
-    ``PPM_STATS_SCHEMA``; malformed payloads yield ``valid=false``
-    rows with NULL stats instead of failing the task (corpus hygiene:
-    one corrupt blob must not kill a 100 TB decode pass).
-
-    ``codec='png'``: a REAL COMPRESSED public codec — PNG 8-bit RGB
-    via stdlib ``zlib`` inflate + per-scanline filter reconstruction
-    (:func:`_make_png_decoder`) — same output schema and same
-    corrupt-payload contract as the ppm branch.
-
-    ``codec='wav'``: a REAL AUDIO codec — RIFF/WAVE 16-bit PCM parse
-    (:func:`_make_wav_parser`) + per-channel numpy sample means —
-    output schema ``WAV_STATS_SCHEMA``, same corrupt-payload contract.
-
-    ``codec='flac'``: a REAL COMPRESSED LOSSLESS audio codec — FLAC
-    subset-16-bit decode (:func:`_make_flac_decoder`: Rice residuals,
-    FIXED/LPC prediction, stereo decorrelation, CRC-8/CRC-16 + MD5
-    verification) + the same per-channel means — output schema
-    ``WAV_STATS_SCHEMA`` (the stats are codec-independent), same
-    corrupt-payload contract.
-
-    ``codec='jpeg'``: a REAL LOSSY codec — baseline JPEG (T.81) via
-    stdlib Huffman decode + batched numpy IDCT + JFIF color transform
-    (:func:`_make_jpeg_decoder`) — same output schema and corrupt-
-    payload contract as the ppm/png branches.
-
-    ``codec='y4m'``: a REAL VIDEO container — YUV4MPEG2 uncompressed
-    planar stream parse with per-frame iteration
-    (:func:`_make_y4m_parser`) + per-channel means across frames —
-    output schema ``Y4M_STATS_SCHEMA``, same corrupt-payload contract.
-
-    ``codec='gif'``: a REAL PALETTE+LZW codec — GIF87a/89a decode
-    (:func:`_make_gif_decoder`) with animation frames, interlace and
-    local-color-table support — output schema ``GIF_STATS_SCHEMA``
-    (means + an order-sensitive weighted checksum), same
-    corrupt-payload contract.
-
-    ``codec='mjpeg'``: a REAL COMPRESSED VIDEO codec — MJPEG-in-AVI,
-    composing the RIFF container walk (:func:`_make_avi_parser`) with
-    the baseline JPEG decoder per frame — output schema
-    ``MJPEG_STATS_SCHEMA`` (geometry + frame rate + means + a
-    frame-order-sensitive weighted checksum), same corrupt-payload
-    contract. Every decoded frame's dimensions must match the
-    container header (a lying frame makes the payload corrupt, and
-    the JPEG decoder's own pixel cap bounds it first).
-
-    ``codec='mrle'``: a REAL INTER-FRAME video codec — Microsoft
-    RLE8-in-AVI: the RIFF container walk (palette-parsing variant)
-    composed with the BI_RLE8 opcode playback
-    (:func:`_make_rle8_frame_decoder`), where skip opcodes carry
-    pixels forward from the PREVIOUS frame — temporal prediction.
-    Output schema ``MJPEG_STATS_SCHEMA`` (the stats are
-    codec-independent), same corrupt-payload contract. Frame 0 plays
-    against an all-zero canvas (the deterministic baseline the
-    fixture encoder also diffs against).
+    Every other codec is a REAL decoder registered in :data:`CODECS`
+    (ppm, png, jpeg images; wav, flac audio; y4m, gif, mjpeg, mrle
+    video — see the module docstring), with that entry's output
+    schema: ``doc_id, valid`` followed by the codec's stats. Malformed
+    payloads yield ``valid=false`` rows with NULL stats
+    (:func:`_decode_stats`).
 
     Any other codec raises — motion-compensated entropy-coded video
     (H.264, VP9, ...) needs ffmpeg, absent in this environment.
     """
-    if codec == "mrle":
-        parse_avi = _make_avi_parser("mrle")
-        play_rle8 = _make_rle8_frame_decoder()
-
-        def decode_mrle_batches(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                keys = ("valid", "w", "h", "nf", "fn", "fd", "r", "g", "b", "ws")
-                rows = {k: [] for k in keys}
-                for payload in pdf["payload"]:
-                    try:
-                        if payload is None:
-                            raise ValueError("null payload")
-                        w, h, fn, fd, frames, pal = parse_avi(bytes(payload))
-                        # uint8 canvas (indices are < 256 by the
-                        # palette check): the worst header the parser
-                        # admits costs 16.7MB, the PNG-cap parity the
-                        # geometry bound above promises
-                        canvas = np.zeros((h, w), dtype=np.uint8)
-                        sums = np.zeros(3, dtype=np.float64)
-                        wsum = 0
-                        for f, data in enumerate(frames):
-                            canvas = play_rle8(data, w, h, canvas, len(pal))
-                            rgb = pal[canvas.reshape(-1)].astype(np.int64)
-                            sums += rgb.sum(axis=0)
-                            wsum += (f + 1) * int(rgb[:, 0].sum())
-                        nf = len(frames)
-                        means = sums / (nf * w * h) if nf else None
-                        rows["valid"].append(True)
-                        rows["w"].append(w)
-                        rows["h"].append(h)
-                        rows["nf"].append(nf)
-                        rows["fn"].append(fn)
-                        rows["fd"].append(fd)
-                        for c, k in zip((0, 1, 2), ("r", "g", "b")):
-                            rows[k].append(
-                                round(float(means[c]), 6)
-                                if means is not None
-                                else None
-                            )
-                        rows["ws"].append(wsum if nf else None)
-                    except ValueError:
-                        rows["valid"].append(False)
-                        for k in keys[1:]:
-                            rows[k].append(None)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "valid": pd.Series(rows["valid"], dtype="bool"),
-                        "width": pd.Series(rows["w"], dtype="Int32"),
-                        "height": pd.Series(rows["h"], dtype="Int32"),
-                        "n_frames": pd.Series(rows["nf"], dtype="Int64"),
-                        "fps_num": pd.Series(rows["fn"], dtype="Int32"),
-                        "fps_den": pd.Series(rows["fd"], dtype="Int32"),
-                        "r_mean": pd.Series(rows["r"], dtype="float64"),
-                        "g_mean": pd.Series(rows["g"], dtype="float64"),
-                        "b_mean": pd.Series(rows["b"], dtype="float64"),
-                        "r_fwsum": pd.Series(rows["ws"], dtype="Int64"),
-                    }
-                )
-
-        return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
-            decode_mrle_batches, MJPEG_STATS_SCHEMA
-        )
-    if codec == "mjpeg":
-        parse_avi = _make_avi_parser()
-        decode_jpeg_frame = _make_jpeg_decoder()
-
-        def decode_mjpeg_batches(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                keys = ("valid", "w", "h", "nf", "fn", "fd", "r", "g", "b", "ws")
-                rows = {k: [] for k in keys}
-                for payload in pdf["payload"]:
-                    try:
-                        if payload is None:
-                            raise ValueError("null payload")
-                        w, h, fn, fd, frames = parse_avi(bytes(payload))
-                        sums = np.zeros(3, dtype=np.float64)
-                        wsum = 0
-                        for f, jpeg in enumerate(frames):
-                            fw, fh, pix = decode_jpeg_frame(jpeg)
-                            if (fw, fh) != (w, h):
-                                raise ValueError(
-                                    f"frame {f} is {fw}x{fh}, container "
-                                    f"declares {w}x{h}"
-                                )
-                            sums += pix.sum(axis=0, dtype=np.float64)
-                            wsum += (f + 1) * int(
-                                pix[:, 0].sum(dtype=np.int64)
-                            )
-                        nf = len(frames)
-                        # zero-frame AVI: VALID with NULL stats incl.
-                        # the checksum (wav/y4m/gif no-data parity)
-                        means = sums / (nf * w * h) if nf else None
-                        rows["valid"].append(True)
-                        rows["w"].append(w)
-                        rows["h"].append(h)
-                        rows["nf"].append(nf)
-                        rows["fn"].append(fn)
-                        rows["fd"].append(fd)
-                        for c, k in zip((0, 1, 2), ("r", "g", "b")):
-                            rows[k].append(
-                                round(float(means[c]), 6)
-                                if means is not None
-                                else None
-                            )
-                        rows["ws"].append(wsum if nf else None)
-                    except ValueError:
-                        rows["valid"].append(False)
-                        for k in keys[1:]:
-                            rows[k].append(None)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "valid": pd.Series(rows["valid"], dtype="bool"),
-                        "width": pd.Series(rows["w"], dtype="Int32"),
-                        "height": pd.Series(rows["h"], dtype="Int32"),
-                        "n_frames": pd.Series(rows["nf"], dtype="Int64"),
-                        "fps_num": pd.Series(rows["fn"], dtype="Int32"),
-                        "fps_den": pd.Series(rows["fd"], dtype="Int32"),
-                        "r_mean": pd.Series(rows["r"], dtype="float64"),
-                        "g_mean": pd.Series(rows["g"], dtype="float64"),
-                        "b_mean": pd.Series(rows["b"], dtype="float64"),
-                        "r_fwsum": pd.Series(rows["ws"], dtype="Int64"),
-                    }
-                )
-
-        return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
-            decode_mjpeg_batches, MJPEG_STATS_SCHEMA
-        )
-    if codec == "gif":
-        decode_gif = _make_gif_decoder()
-
-        def decode_gif_batches(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                keys = ("valid", "w", "h", "nf", "r", "g", "b", "ws")
-                rows = {k: [] for k in keys}
-                for payload in pdf["payload"]:
-                    try:
-                        if payload is None:
-                            raise ValueError("null payload")
-                        w, h, frames = decode_gif(bytes(payload))
-                        means = (
-                            frames.mean(axis=(0, 1), dtype=np.float64)
-                            if len(frames)
-                            else None
-                        )
-                        # zero-frame GIF: NULL all stats incl. the
-                        # checksum, matching the wav/y4m no-data rows
-                        red = frames[:, :, 0].reshape(-1).astype(np.int64)
-                        wsum = (
-                            int((red * (np.arange(len(red), dtype=np.int64) + 1))
-                                .sum())
-                            if len(frames)
-                            else None
-                        )
-                        rows["valid"].append(True)
-                        rows["w"].append(w)
-                        rows["h"].append(h)
-                        rows["nf"].append(len(frames))
-                        for c, k in zip((0, 1, 2), ("r", "g", "b")):
-                            rows[k].append(
-                                round(float(means[c]), 6)
-                                if means is not None
-                                else None
-                            )
-                        rows["ws"].append(wsum)
-                    except ValueError:
-                        rows["valid"].append(False)
-                        for k in keys[1:]:
-                            rows[k].append(None)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "valid": pd.Series(rows["valid"], dtype="bool"),
-                        "width": pd.Series(rows["w"], dtype="Int32"),
-                        "height": pd.Series(rows["h"], dtype="Int32"),
-                        "n_frames": pd.Series(rows["nf"], dtype="Int64"),
-                        "r_mean": pd.Series(rows["r"], dtype="float64"),
-                        "g_mean": pd.Series(rows["g"], dtype="float64"),
-                        "b_mean": pd.Series(rows["b"], dtype="float64"),
-                        "r_wsum": pd.Series(rows["ws"], dtype="Int64"),
-                    }
-                )
-
-        return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
-            decode_gif_batches, GIF_STATS_SCHEMA
-        )
-    if codec == "y4m":
-        parse_y4m = _make_y4m_parser()
-
-        def decode_y4m_batches(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                keys = ("valid", "w", "h", "nf", "fn", "fd", "y", "cb", "cr")
-                rows = {k: [] for k in keys}
-                for payload in pdf["payload"]:
-                    try:
-                        if payload is None:
-                            raise ValueError("null payload")
-                        w, h, fn, fd, frames = parse_y4m(bytes(payload))
-                        # zero-frame stream is VALID with NULL means
-                        # (same guard as the WAV branch: mean() over
-                        # an empty axis would warn and produce nan)
-                        means = (
-                            frames.mean(axis=(0, 2), dtype=np.float64)
-                            if len(frames)
-                            else None
-                        )
-                        mono = frames.shape[1] == 1
-                        rows["valid"].append(True)
-                        rows["w"].append(w)
-                        rows["h"].append(h)
-                        rows["nf"].append(len(frames))
-                        rows["fn"].append(fn)
-                        rows["fd"].append(fd)
-                        rows["y"].append(
-                            round(float(means[0]), 6) if means is not None else None
-                        )
-                        rows["cb"].append(
-                            round(float(means[1]), 6)
-                            if means is not None and not mono
-                            else None
-                        )
-                        rows["cr"].append(
-                            round(float(means[2]), 6)
-                            if means is not None and not mono
-                            else None
-                        )
-                    except ValueError:
-                        rows["valid"].append(False)
-                        for k in keys[1:]:
-                            rows[k].append(None)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "valid": pd.Series(rows["valid"], dtype="bool"),
-                        "width": pd.Series(rows["w"], dtype="Int32"),
-                        "height": pd.Series(rows["h"], dtype="Int32"),
-                        "n_frames": pd.Series(rows["nf"], dtype="Int64"),
-                        "fps_num": pd.Series(rows["fn"], dtype="Int32"),
-                        "fps_den": pd.Series(rows["fd"], dtype="Int32"),
-                        "y_mean": pd.Series(rows["y"], dtype="float64"),
-                        "cb_mean": pd.Series(rows["cb"], dtype="float64"),
-                        "cr_mean": pd.Series(rows["cr"], dtype="float64"),
-                    }
-                )
-
-        return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
-            decode_y4m_batches, Y4M_STATS_SCHEMA
-        )
-    if codec == "jpeg":
-        decode_jpeg = _make_jpeg_decoder()
-
-        def decode_jpeg_batches(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                rows = {k: [] for k in ("valid", "width", "height", "r", "g", "b")}
-                for payload in pdf["payload"]:
-                    try:
-                        if payload is None:
-                            raise ValueError("null payload")
-                        w, h, pix = decode_jpeg(bytes(payload))
-                        means = pix.mean(axis=0, dtype=np.float64)
-                        rows["valid"].append(True)
-                        rows["width"].append(w)
-                        rows["height"].append(h)
-                        for c, m in zip(("r", "g", "b"), means):
-                            rows[c].append(round(float(m), 6))
-                    except ValueError:
-                        rows["valid"].append(False)
-                        rows["width"].append(None)
-                        rows["height"].append(None)
-                        for c in ("r", "g", "b"):
-                            rows[c].append(None)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "valid": pd.Series(rows["valid"], dtype="bool"),
-                        "width": pd.Series(rows["width"], dtype="Int32"),
-                        "height": pd.Series(rows["height"], dtype="Int32"),
-                        "r_mean": pd.Series(rows["r"], dtype="float64"),
-                        "g_mean": pd.Series(rows["g"], dtype="float64"),
-                        "b_mean": pd.Series(rows["b"], dtype="float64"),
-                    }
-                )
-
-        return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
-            decode_jpeg_batches, PPM_STATS_SCHEMA
-        )
-    if codec == "flac":
-        decode_flac = _make_flac_decoder()
-
-        def decode_flac_batches(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                rows = {k: [] for k in ("valid", "nc", "rate", "nf", "c0", "c1")}
-                for payload in pdf["payload"]:
-                    try:
-                        if payload is None:
-                            raise ValueError("null payload")
-                        n_ch, rate, frames = decode_flac(bytes(payload))
-                        # zero-sample stream: VALID with NULL means
-                        # (the wav branch's no-data parity)
-                        means = (
-                            frames.mean(axis=0, dtype=np.float64)
-                            if len(frames)
-                            else None
-                        )
-                        rows["valid"].append(True)
-                        rows["nc"].append(n_ch)
-                        rows["rate"].append(rate)
-                        rows["nf"].append(len(frames))
-                        rows["c0"].append(
-                            round(float(means[0]), 6) if means is not None else None
-                        )
-                        rows["c1"].append(
-                            round(float(means[1]), 6)
-                            if means is not None and n_ch >= 2
-                            else None
-                        )
-                    except ValueError:
-                        rows["valid"].append(False)
-                        for k in ("nc", "rate", "nf", "c0", "c1"):
-                            rows[k].append(None)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "valid": pd.Series(rows["valid"], dtype="bool"),
-                        "n_channels": pd.Series(rows["nc"], dtype="Int32"),
-                        "sample_rate": pd.Series(rows["rate"], dtype="Int32"),
-                        "n_frames": pd.Series(rows["nf"], dtype="Int64"),
-                        "ch0_mean": pd.Series(rows["c0"], dtype="float64"),
-                        "ch1_mean": pd.Series(rows["c1"], dtype="float64"),
-                    }
-                )
-
-        return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
-            decode_flac_batches, WAV_STATS_SCHEMA
-        )
-    if codec == "wav":
-        parse_wav = _make_wav_parser()
-
-        def decode_wav_batches(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                rows = {k: [] for k in ("valid", "nc", "rate", "nf", "c0", "c1")}
-                for payload in pdf["payload"]:
-                    try:
-                        if payload is None:
-                            raise ValueError("null payload")
-                        n_ch, rate, frames = parse_wav(bytes(payload))
-                        # a zero-frame data chunk is VALID (means are
-                        # NULL, not nan) — mean() over it would warn
-                        # and produce nan, so guard before computing
-                        means = (
-                            frames.mean(axis=0, dtype=np.float64)
-                            if len(frames)
-                            else None
-                        )
-                        rows["valid"].append(True)
-                        rows["nc"].append(n_ch)
-                        rows["rate"].append(rate)
-                        rows["nf"].append(len(frames))
-                        rows["c0"].append(
-                            round(float(means[0]), 6) if means is not None else None
-                        )
-                        rows["c1"].append(
-                            round(float(means[1]), 6)
-                            if means is not None and n_ch >= 2
-                            else None
-                        )
-                    except ValueError:
-                        rows["valid"].append(False)
-                        for k in ("nc", "rate", "nf", "c0", "c1"):
-                            rows[k].append(None)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "valid": pd.Series(rows["valid"], dtype="bool"),
-                        "n_channels": pd.Series(rows["nc"], dtype="Int32"),
-                        "sample_rate": pd.Series(rows["rate"], dtype="Int32"),
-                        "n_frames": pd.Series(rows["nf"], dtype="Int64"),
-                        "ch0_mean": pd.Series(rows["c0"], dtype="float64"),
-                        "ch1_mean": pd.Series(rows["c1"], dtype="float64"),
-                    }
-                )
-
-        return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
-            decode_wav_batches, WAV_STATS_SCHEMA
-        )
-    if codec == "png":
-        decode_png = _make_png_decoder()
-
-        def decode_png_batches(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                rows = {k: [] for k in ("valid", "width", "height", "r", "g", "b")}
-                for payload in pdf["payload"]:
-                    try:
-                        if payload is None:
-                            raise ValueError("null payload")
-                        w, h, pix = decode_png(bytes(payload))
-                        means = pix.mean(axis=0, dtype=np.float64)
-                        rows["valid"].append(True)
-                        rows["width"].append(w)
-                        rows["height"].append(h)
-                        for c, m in zip(("r", "g", "b"), means):
-                            rows[c].append(round(float(m), 6))
-                    except ValueError:
-                        rows["valid"].append(False)
-                        rows["width"].append(None)
-                        rows["height"].append(None)
-                        for c in ("r", "g", "b"):
-                            rows[c].append(None)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "valid": pd.Series(rows["valid"], dtype="bool"),
-                        "width": pd.Series(rows["width"], dtype="Int32"),
-                        "height": pd.Series(rows["height"], dtype="Int32"),
-                        "r_mean": pd.Series(rows["r"], dtype="float64"),
-                        "g_mean": pd.Series(rows["g"], dtype="float64"),
-                        "b_mean": pd.Series(rows["b"], dtype="float64"),
-                    }
-                )
-
-        return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
-            decode_png_batches, PPM_STATS_SCHEMA
-        )
-    if codec == "ppm":
-        parse_ppm_p6 = _make_ppm_parser()
-
-        def decode_ppm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                rows = {k: [] for k in ("valid", "width", "height", "r", "g", "b")}
-                for payload in pdf["payload"]:
-                    try:
-                        if payload is None:
-                            raise ValueError("null payload")
-                        w, h, _maxval, off = parse_ppm_p6(bytes(payload))
-                        pix = np.frombuffer(
-                            payload, dtype=np.uint8, count=w * h * 3, offset=off
-                        ).reshape(-1, 3)
-                        means = pix.mean(axis=0, dtype=np.float64)
-                        rows["valid"].append(True)
-                        rows["width"].append(w)
-                        rows["height"].append(h)
-                        for c, m in zip(("r", "g", "b"), means):
-                            rows[c].append(round(float(m), 6))
-                    except ValueError:
-                        rows["valid"].append(False)
-                        rows["width"].append(None)
-                        rows["height"].append(None)
-                        for c in ("r", "g", "b"):
-                            rows[c].append(None)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "valid": pd.Series(rows["valid"], dtype="bool"),
-                        "width": pd.Series(rows["width"], dtype="Int32"),
-                        "height": pd.Series(rows["height"], dtype="Int32"),
-                        "r_mean": pd.Series(rows["r"], dtype="float64"),
-                        "g_mean": pd.Series(rows["g"], dtype="float64"),
-                        "b_mean": pd.Series(rows["b"], dtype="float64"),
-                    }
-                )
-
-        return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
-            decode_ppm, PPM_STATS_SCHEMA
-        )
+    if codec in CODECS:
+        return _decode_stats(media, *CODECS[codec])
     if codec != "fake":
         raise NotImplementedError(
-            f"codec {codec!r}: only 'fake' (byte stats), 'ppm' (real P6 "
-            "parse), 'png' (real zlib inflate + filter reconstruction), "
-            "'wav' (real RIFF/PCM parse), 'flac' (real Rice/FIXED/LPC "
-            "lossless decode), 'jpeg' (real baseline Huffman+IDCT "
-            "decode), 'y4m' (real uncompressed video container), 'gif' "
-            "(real palette+LZW decode), 'mjpeg' (real AVI walk + "
-            "per-frame JPEG decode), and 'mrle' (real inter-frame RLE8 "
-            "playback with carry-forward) run in this environment; "
-            "plug ffmpeg into decode_features here for "
-            "motion-compensated entropy-coded video (H.264/VP9/...)"
+            f"codec {codec!r}: only 'fake' (byte stats) and the real codecs "
+            f"{', '.join(map(repr, CODECS))} run in this environment; add "
+            "an ffmpeg-backed entry to CODECS for motion-compensated "
+            "entropy-coded video (H.264/VP9/...)"
         )
 
     def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -71,12 +71,11 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     # (keyed sketch caches; the SQL ingestion fast path) lead the
     # window so the driver's own oracle re-certifies exactly what
     # changed.  Then the 21-query r9 backlog the r13 comment promised
-    # (the TPC-H-shape remainder), the flagship canary, and 21 seats
-    # burning down the r10 cohort biased to the heavy tier-X paths
-    # (multimodal decode family, corpus rewrites, streaming dedup,
-    # kmeans/int8 ANN).  After this window lands, no query's latest
-    # green driver row is older than r10 and the r10 cohort shrinks
-    # 44 → 23 (enumerated at the bottom as round 15's backlog).
+    # (the TPC-H-shape remainder), the flagship canary, five family
+    # sentinels, and 16 seats burning down the r10 cohort biased to the
+    # heavy tier-X paths (multimodal decode family, streaming dedup,
+    # int8 ANN).  After this window lands the r10 cohort shrinks
+    # 44 → 28 (enumerated at the bottom as round 15's backlog).
     # Rotated-out ever-green queries keep local regression safety via
     # tests/test_catalog.py (identical row+schema+hash DuckDB
     # comparison, catalog-wide).
@@ -112,9 +111,13 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "q_win_distribution",
     # ---- flagship canary ----
     "q_session_window",         # flagship; §2.9 batch windows (bench canary)
-    # ---- r10-stale fills (21 of the remaining 44; heavy tier-X
-    # ---- corpus ops, the whole multimodal decode family, streaming
-    # ---- dedup, clustering/ANN, SQL/temporal reps) ----
+    # ---- sentinels for 2.2/2.5/2.6/2.7/SQL entry (seatless after r14's rotation) ----
+    "q_filter",
+    "q_win_rank",
+    "q_topk_per_group",
+    "q_union_all",
+    "q_sql_cte",
+    # ---- r10-stale fills (16 of the remaining 44) ----
     "q_multimodal_decode_gif",
     "q_multimodal_decode_jpeg",
     "q_multimodal_decode_mjpeg",
@@ -124,25 +127,22 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "q_lm_score",
     "q_dedup_span",
     "q_dedup_within",
-    "q_curation_v2",
-    "q_tokenize_vocab",
-    "q_training_pipeline",
     "q_stream_dedup",
-    "q_embed_kmeans",
     "q_sim_topk_int8",
     "q_udf_arrow",
     "q_scan_json",
-    "q_scd2",
     "q_join_temporal",
     "q_pivot",
     "q_quality_score",
-    # Round-15 backlog (the r10 remainder, 23): q_agg_approx_quantile
+    # Round-15 backlog (the r10 remainder, 28): q_agg_approx_quantile
     # q_agg_bitmap_distinct q_agg_histogram q_budget_select
-    # q_data_quality q_fn_array2 q_fn_bitwise q_fn_date2 q_fn_regex
-    # q_fn_try q_fn_variant q_intersect_all q_join_asof_tol q_lang_id
-    # q_mix_temperature q_multimodal_features q_multimodal_framesample
-    # q_pii_redact q_quality_repetition q_sample_domain_cap
-    # q_sql_grouping_sets q_sql_scalar_subquery q_unpivot.
+    # q_curation_v2 q_data_quality q_embed_kmeans q_fn_array2
+    # q_fn_bitwise q_fn_date2 q_fn_regex q_fn_try q_fn_variant
+    # q_intersect_all q_join_asof_tol q_lang_id q_mix_temperature
+    # q_multimodal_features q_multimodal_framesample q_pii_redact
+    # q_quality_repetition q_sample_domain_cap q_scd2
+    # q_sql_grouping_sets q_sql_scalar_subquery q_tokenize_vocab
+    # q_training_pipeline q_unpivot.
 )
 
 

@@ -13,7 +13,11 @@ from flink_samples_spark.llmops.dedup import (
     ngram_jaccard_pairs,
     simhash_signatures,
 )
-from flink_samples_spark.llmops.multimodal import attach_binary_payload, decode_features
+from flink_samples_spark.llmops.multimodal import (
+    CODECS,
+    attach_binary_payload,
+    decode_features,
+)
 from flink_samples_spark.llmops.similarity import (
     brute_force_cosine_topk,
     ivf_cosine_topk,
@@ -103,6 +107,25 @@ def test_decode_features_deterministic_and_stub_gated(spark, sf_dir):
     with pytest.raises(NotImplementedError):
         decode_features(media, codec="h264")
 
+
+
+@pytest.mark.parametrize("codec", sorted(CODECS))
+def test_codec_table_rejects_payloads_with_its_declared_schema(spark, codec):
+    """The shared decode driver's contract, for every codec in the
+    table: a NULL, an empty and a junk payload each keep their row,
+    as valid=false with EVERY other column NULL, under exactly the
+    schema the table declares."""
+    declared = spark.createDataFrame([], CODECS[codec][1]).schema
+    media = spark.createDataFrame(
+        [(1, None), (2, b""), (3, b"\x00" * 7)], "doc_id bigint, payload binary"
+    )
+    out = decode_features(media, codec=codec)
+    assert out.schema == declared
+    rows = sorted(out.collect())
+    assert [r.doc_id for r in rows] == [1, 2, 3]
+    for r in rows:
+        assert r.valid is False, (codec, r)
+        assert all(r[c] is None for c in declared.names[2:]), (codec, r)
 
 def test_ppm_decode_known_image_and_corrupt_payloads(spark):
     """The REAL codec branch: a hand-written 2x2 P6 blob (comment
